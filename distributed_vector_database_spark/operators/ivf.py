@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 
 from distributed_vector_database_spark.functions.vector import squared_euclidean
 from distributed_vector_database_spark.operators.topk import topk
+from distributed_vector_database_spark.sources import index_layout
+from distributed_vector_database_spark.sources.compaction import compact_layout
 
 __all__ = [
     "IVFIndex",
@@ -122,55 +124,6 @@ def nearest_shards(
     ]
     dists.sort()
     return [sid for _, sid in dists[: max(1, nprobe)]]
-
-
-def _read_json_sidecar(dir_path: str, spark=None) -> list[dict]:
-    """Read a tiny ``coalesce(1).write.json`` sidecar dir (``_centroids``
-    / ``_recall_curve``) as a list of dicts WITHOUT a Spark job — no
-    hidden-path-filter warning (VERDICT r11 item 3), zero jobs before a
-    cold load's first pruned scan. Local dirs go through plain
-    ``os``/``open``; anything else (``hdfs://``, ``s3a://``, ``file:``
-    URIs — ADVICE r12: write/save persist via Spark to any Hadoop FS, so
-    load must read them back from the same FS) goes through the Hadoop
-    FileSystem API driver-side. Missing or empty dir -> []."""
-    import json
-    import os
-
-    rows: list[dict] = []
-    if os.path.isdir(dir_path):
-        for name in sorted(os.listdir(dir_path)):
-            if not name.startswith("part-"):
-                continue
-            with open(os.path.join(dir_path, name)) as fh:
-                for line in fh:
-                    line = line.strip()
-                    if line:
-                        rows.append(json.loads(line))
-        return rows
-    if spark is None:
-        return []
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(dir_path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return []
-    parts = sorted(
-        (st.getPath() for st in fs.listStatus(p)),
-        key=lambda hp: hp.getName(),
-    )
-    for hp in parts:
-        if not hp.getName().startswith("part-"):
-            continue
-        stream = fs.open(hp)
-        try:
-            txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-        for line in txt.splitlines():
-            line = line.strip()
-            if line:
-                rows.append(json.loads(line))
-    return rows
 
 
 def pick_nprobe(recall_curve, target_recall: float) -> int:
@@ -344,74 +297,38 @@ class IVFIndex:
             self._df = assigned.repartition("shard_id").cache()
             self._df.count()  # materialize
             return
-        (
-            assigned.repartition("shard_id")
-            .write.mode(mode)
-            .partitionBy("shard_id")
-            .parquet(self.path)
-        )
+        index_layout.write_shards(assigned, self.path, mode)
         self.save_centroids()
         self._df = None
 
     # ---- persistence ------------------------------------------------------
 
     def save_centroids(self) -> None:
-        """Persist the centroid table INSIDE the index layout (under a
-        ``_``-prefixed subdir, which parquet readers treat as hidden — like
-        ``_SUCCESS``). The reference keeps centroids only in router memory
-        (`reference: src/compute_server.py:23-26`) and loses them on
-        restart; a persisted index must carry its own routing table."""
+        """Persist the centroid table INSIDE the index layout as the
+        ``_centroids`` sidecar (see ``sources/index_layout.py``), written
+        driver-side with no Spark job. The reference keeps centroids only
+        in router memory (`reference: src/compute_server.py:23-26`) and
+        loses them on restart; a persisted index must carry its own
+        routing table.
+
+        Also syncs the persisted tuning artifact with the instance: a
+        live curve rides along, an invalidated one (``set_centroids``,
+        ``write``) is removed so ``load`` cannot resurrect stale
+        evidence."""
         if self.path is None:
             raise ValueError("in-memory index: no path to save centroids to")
-        cent = self.spark.createDataFrame(
-            [(i, c) for i, c in enumerate(self.centroids)],
-            "shard_id int, centroid array<double>",
-        )
-        cent.coalesce(1).write.mode("overwrite").json(
-            f"{self.path}/_centroids"
-        )
-        # keep the persisted tuning artifact in sync with the instance:
-        # a live curve rides along; an invalidated one (set_centroids)
-        # is removed so load() cannot resurrect stale evidence
-        curve_dir = f"{self.path}/_recall_curve"
-        if self.recall_curve is not None:
-            self._write_recall_curve()
-        else:
-            # Hadoop-FS delete, not shutil (ADVICE r12): the index root
-            # may be hdfs://, s3a://, or a file: URI — rmtree there was
-            # a silent no-op, resurrecting a stale curve on load().
-            # fs.delete is recursive and a no-op when absent; works for
-            # plain local paths too (LocalFileSystem).
-            jvm = self.spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(curve_dir)
-            fs = p.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            fs.delete(p, True)
+        index_layout.write_centroids(self.spark, self.path, self.centroids)
+        self._save_recall_curve()
 
-    def _write_recall_curve(self) -> None:
-        """Persist the measured curve next to the centroids (same hidden
-        ``_``-dir convention). The reference's ``shards_to_search`` knob
-        (`reference: src/compute_server.py:60-63`) becomes a durable,
-        evidence-backed index property instead of a per-session
-        recomputation (VERDICT r10 item 5)."""
-        if self.path is None:
-            raise ValueError("in-memory index: no path to save curve to")
-        if not self.recall_curve:
-            raise ValueError("no measured recall curve to persist")
-        rows = [
-            (
-                int(p["nprobe"]),
-                float(p["mean_recall"]),
-                int(p.get("n_queries", 0)),
-                int(p.get("k", 0)),
-            )
-            for p in self.recall_curve
-        ]
-        frame = self.spark.createDataFrame(
-            rows,
-            "nprobe int, mean_recall double, n_queries int, k int",
-        )
-        frame.coalesce(1).write.mode("overwrite").json(
-            f"{self.path}/_recall_curve"
+    def _save_recall_curve(self) -> None:
+        """Persist the measured curve as the ``_recall_curve`` sidecar, or
+        remove it when the curve is invalidated. The reference's
+        ``shards_to_search`` knob (`reference:
+        src/compute_server.py:60-63`) becomes a durable, evidence-backed
+        index property instead of a per-session recomputation (VERDICT
+        r10 item 5)."""
+        index_layout.write_sidecar(
+            self.spark, self.path, "_recall_curve", self.recall_curve or []
         )
 
     def tune(
@@ -450,7 +367,7 @@ class IVFIndex:
             for r in rows
         ]
         if self.path is not None:
-            self._write_recall_curve()
+            self._save_recall_curve()
         return self.recall_curve
 
     @classmethod
@@ -465,25 +382,20 @@ class IVFIndex:
         """Open a persisted index: data layout + its saved centroid table.
 
         The sidecars (``_centroids``, ``_recall_curve``) are read
-        driver-side without a Spark job: they are a handful of JSON
-        lines, and handing the ``_``-prefixed dirs to ``spark.read``
-        trips DataSource's hidden-path filter into a spurious "All paths
-        were ignored" warning on every cold load (VERDICT r11 item 3).
-        Local index roots read via plain ``open``; hdfs://, s3a://, and
-        file: URIs via the Hadoop FileSystem API (ADVICE r12) — the same
-        FS ``write``/``save_centroids`` persisted to. Either way: zero
-        jobs before the first pruned scan."""
-        cent_rows = _read_json_sidecar(f"{path}/_centroids", spark)
-        if not cent_rows:
-            raise ValueError(f"no centroids found under {path}/_centroids")
-        cent_rows.sort(key=lambda r: int(r["shard_id"]))
-        cents = [list(map(float, r["centroid"])) for r in cent_rows]
+        driver-side through the Hadoop FileSystem API
+        (``sources/index_layout.py``): they are a handful of JSON lines,
+        and handing the ``_``-prefixed dirs to ``spark.read`` would cost
+        a job each plus a spurious "All paths were ignored" warning
+        (VERDICT r11 item 3). Plain paths, ``file:``, ``hdfs://`` and
+        ``s3a://`` roots all read from the FS ``write`` persisted to
+        (ADVICE r12). Zero jobs before the first pruned scan."""
+        cents = index_layout.read_centroids(spark, path)
         idx = cls(
             spark, cents, path=path, vector_col=vector_col, id_col=id_col
         )
         # pick up the persisted tuning artifact when one rode along —
         # autotuned search on a loaded index then pays ZERO curve jobs
-        curve_rows = _read_json_sidecar(f"{path}/_recall_curve", spark)
+        curve_rows = index_layout.read_sidecar(spark, path, "_recall_curve")
         if curve_rows:
             curve_rows.sort(key=lambda r: int(r["nprobe"]))
             idx.recall_curve = [
@@ -497,39 +409,19 @@ class IVFIndex:
             ]
         return idx
 
-    def compact(self) -> None:
-        """Rewrite the layout into few whole files per shard.
+    def compact(self) -> dict:
+        """Coalesce the small files streaming ingest leaves behind.
 
         Streaming ingest (streaming/ingest.py) appends O(num_shards) files
         per micro-batch; over many batches the small-file count degrades
-        scan planning. Compaction is one read + one partitioned rewrite via
-        a staging directory (an in-place overwrite would read and clobber
-        the same files)."""
+        scan planning. This is the crash-safe per-shard file rewrite of
+        ``sources.compaction.compact_layout``: the same rows stay in the
+        same shard directories and the sidecars are untouched, so the
+        centroids and a measured recall curve stay valid. Returns its
+        ``{partitions_compacted, files_before, files_after}`` summary."""
         if self.path is None:
             raise ValueError("in-memory index has nothing to compact")
-        spark = self.spark
-        current = spark.read.parquet(self.path).drop("shard_id")
-        staging = f"{self.path}__compacting"
-        # compaction rewrites the SAME rows (content-identical corpus), so
-        # a measured recall curve stays valid — shield it from write()'s
-        # corpus-change invalidation (ADVICE r11) and re-persist it into
-        # the compacted layout after the swap
-        saved_curve = self.recall_curve
-        saved_path, self.path = self.path, staging
-        try:
-            self.write(current)
-        finally:
-            self.path = saved_path
-        self.recall_curve = saved_curve
-        # swap staging into place
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        Path = jvm.org.apache.hadoop.fs.Path
-        fs = Path(self.path).getFileSystem(hconf)
-        fs.delete(Path(self.path), True)
-        fs.rename(Path(staging), Path(self.path))
-        if self.recall_curve is not None:
-            self._write_recall_curve()
+        return compact_layout(self.spark, self.path)
 
     # ---- read -------------------------------------------------------------
 

@@ -6,9 +6,11 @@ pieces (`operators/ivf.py`, `operators/pq.py`):
   build:   fit centroids (MLlib on a sample) → assign shards → fit PQ
            codebooks on the CENTROID RESIDUALS → Arrow-GEMM encode →
            write ``partitionBy(shard_id)`` parquet carrying
-           (id, vector, codes); centroids + codebooks persist INSIDE the
-           layout under ``_``-prefixed subdirs (hidden to readers, same
-           convention as ``IVFIndex.save_centroids``).
+           (id, vector, codes); centroids, codebooks and the generation
+           watermark persist INSIDE the layout as ``_``-prefixed
+           sidecars, written and read driver-side with no Spark job —
+           the layout ``IVFIndex`` shares, owned by
+           ``sources/index_layout.py``.
   search:  probe nprobe cells (directory-level partition pruning — the
            unprobed shards' files are never opened), numpy-gather ADC
            over the probed CODES column only (column pruning: the float
@@ -56,6 +58,8 @@ from .pq import (
     residual_col,
     save_codebooks,
 )
+from ..sources import index_layout
+from ..sources.compaction import compact_layout
 from .topk import topk
 
 __all__ = ["IVFPQIndex"]
@@ -161,20 +165,9 @@ class IVFPQIndex:
             self._df = enc.repartition("shard_id").cache()
             self._df.count()
             return
-        (
-            enc.repartition("shard_id")
-            .write.mode(mode)
-            .partitionBy("shard_id")
-            .parquet(self.path)
-        )
+        index_layout.write_shards(enc, self.path, mode)
         self._write_gen(0)
-        cent = self.spark.createDataFrame(
-            [(i, c) for i, c in enumerate(self.centroids)],
-            "shard_id int, centroid array<double>",
-        )
-        cent.coalesce(1).write.mode("overwrite").json(
-            f"{self.path}/_centroids"
-        )
+        index_layout.write_centroids(self.spark, self.path, self.centroids)
         save_codebooks(self.spark, self.codebooks, self.path)
         self._df = None
 
@@ -187,16 +180,9 @@ class IVFPQIndex:
         vector_col: str = "embedding",
         id_col: str = "vec_id",
     ) -> "IVFPQIndex":
-        """Open a persisted index: layout + centroids + codebooks."""
-        rows = (
-            spark.read.schema("shard_id int, centroid array<double>")
-            .json(f"{path}/_centroids")
-            .orderBy("shard_id")
-            .collect()
-        )
-        if not rows:
-            raise ValueError(f"no centroids found under {path}/_centroids")
-        cents = [list(map(float, r["centroid"])) for r in rows]
+        """Open a persisted index: layout + centroids + codebooks. The
+        sidecars are read driver-side, so a load starts no Spark job."""
+        cents = index_layout.read_centroids(spark, path)
         books = load_codebooks(spark, path)
         return cls(
             spark, cents, books, path=path, vector_col=vector_col, id_col=id_col
@@ -217,31 +203,11 @@ class IVFPQIndex:
 
     # ---- generations + deletes (segment-store delete bitmap) --------------
 
-    def _gen_path(self):
-        return f"{self.path}/_gen_watermark"
-
     def _read_gen(self) -> int:
-        jvm = self.spark._jvm
-        pth = jvm.org.apache.hadoop.fs.Path(self._gen_path())
-        fs = pth.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        if not fs.exists(pth):
-            return 0
-        stream = fs.open(pth)
-        try:
-            txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-        return int(txt.strip() or 0)
+        return index_layout.read_generation(self.spark, self.path)
 
     def _write_gen(self, n: int) -> None:
-        jvm = self.spark._jvm
-        pth = jvm.org.apache.hadoop.fs.Path(self._gen_path())
-        fs = pth.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        out = fs.create(pth, True)
-        try:
-            out.write(bytearray(str(n).encode("utf-8")))
-        finally:
-            out.close()
+        index_layout.write_generation(self.spark, self.path, n)
 
     def append_batch(self, df: DataFrame) -> int:
         """Encode and append ``df`` as a NEW generation; returns its
@@ -251,12 +217,7 @@ class IVFPQIndex:
             raise ValueError("append_batch requires a path-backed index")
         gen = self._read_gen() + 1
         enc = self._encode(df).withColumn("_gen", F.lit(gen).cast("long"))
-        (
-            enc.repartition("shard_id")
-            .write.mode("append")
-            .partitionBy("shard_id")
-            .parquet(self.path)
-        )
+        index_layout.write_shards(enc, self.path, "append")
         self._write_gen(gen)
         return gen
 
@@ -337,8 +298,6 @@ class IVFPQIndex:
         physically."""
         if self.path is None:
             raise ValueError("compact requires a path-backed index")
-        from ..sources.compaction import compact_layout
-
         return compact_layout(
             self.spark, self.path, target_file_bytes=target_file_bytes
         )
@@ -357,20 +316,13 @@ class IVFPQIndex:
         live = self._live(
             self.spark.read.parquet(self.path).drop("shard_id")
         ).drop("_gen")
-        jvm = self.spark.sparkContext._jvm
-        hconf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        Path = jvm.org.apache.hadoop.fs.Path
-        fs = Path(self.path).getFileSystem(hconf)
         staging = f"{self.path}__rewriting"
         saved, self.path = self.path, staging
         try:
             self.write(live.select(self.id_col, self.vector_col))
         finally:
             self.path = saved
-        if not fs.delete(Path(self.path), True):
-            raise IOError("ivfpq rewrite: old layout delete failed")
-        if not fs.rename(Path(staging), Path(self.path)):
-            raise IOError("ivfpq rewrite: staging rename failed")
+        index_layout.replace_dir(self.spark, staging, self.path)
         return n
 
     def search(

@@ -39,6 +39,8 @@ from collections.abc import Iterator, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources import index_layout
+
 __all__ = [
     "fit_pq_codebooks",
     "pq_encode",
@@ -759,34 +761,29 @@ def householder_rotation(dim: int) -> list[list[float]]:
 def save_codebooks(
     spark, codebooks: Codebooks, path: str, *, subdir: str = "_pq_codebooks"
 ) -> None:
-    """Persist codebooks INSIDE an index layout (``_``-prefixed subdir =
-    hidden to parquet readers, same convention as ``IVFIndex.save_centroids``).
-    One row per (subspace, code) keeps the file schema flat and readable
-    by any engine."""
+    """Persist codebooks INSIDE an index layout as a ``_``-prefixed
+    sidecar (hidden to parquet readers), written driver-side with no
+    Spark job — the ``sources/index_layout.py`` convention the IVF
+    centroids share. One row per (subspace, code) keeps the file schema
+    flat and readable by any engine."""
     m, k, sub = _check(codebooks)
     rows = [
-        (j, c, [float(x) for x in codebooks[j][c]])
+        {"subspace": j, "code": c, "codeword": [float(x) for x in codebooks[j][c]]}
         for j in range(m)
         for c in range(k)
     ]
-    df = spark.createDataFrame(
-        rows, "subspace int, code int, codeword array<double>"
-    )
-    df.coalesce(1).write.mode("overwrite").json(f"{path}/{subdir}")
+    index_layout.write_sidecar(spark, path, subdir, rows)
 
 
 def load_codebooks(
     spark, path: str, *, subdir: str = "_pq_codebooks"
 ) -> list[list[list[float]]]:
-    """Inverse of :func:`save_codebooks`; validates rectangular shape."""
-    rows = (
-        spark.read.schema("subspace int, code int, codeword array<double>")
-        .json(f"{path}/{subdir}")
-        .orderBy("subspace", "code")
-        .collect()
-    )
+    """Inverse of :func:`save_codebooks` (driver-side, no Spark job);
+    validates rectangular shape."""
+    rows = index_layout.read_sidecar(spark, path, subdir)
     if not rows:
         raise ValueError(f"no codebooks found under {path}/{subdir}")
+    rows.sort(key=lambda r: (int(r["subspace"]), int(r["code"])))
     books: list[list[list[float]]] = []
     for r in rows:
         while len(books) <= r["subspace"]:

@@ -31,21 +31,14 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .index_layout import filesystem, hadoop_path
 
 __all__ = ["layout_file_stats", "compact_layout"]
 
 
-def _fs(spark: SparkSession, path: str):
-    """Hadoop FileSystem + Path for ``path`` (works for file:// and hdfs://)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
-
-
 def _list_partition_dirs(spark: SparkSession, root: str) -> list[str]:
-    fs, hroot = _fs(spark, root)
+    fs, hroot = filesystem(spark, root)
     out = []
     for st in fs.listStatus(hroot):
         name = st.getPath().getName()
@@ -54,10 +47,10 @@ def _list_partition_dirs(spark: SparkSession, root: str) -> list[str]:
     return sorted(out)
 
 
-def _data_files(fs, jvm, dir_path: str):
+def _data_files(spark: SparkSession, fs, dir_path: str):
     """(path, length) of committed parquet data files directly under dir."""
     files = []
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(dir_path)):
+    for st in fs.listStatus(hadoop_path(spark, dir_path)):
         name = st.getPath().getName()
         if st.isFile() and not name.startswith(("_", ".")):
             files.append((st.getPath(), int(st.getLen())))
@@ -67,11 +60,10 @@ def _data_files(fs, jvm, dir_path: str):
 def layout_file_stats(spark: SparkSession, path: str) -> DataFrame:
     """Per-hive-partition (partition, n_files, total_bytes) of a layout —
     the audit that decides which partitions need compaction."""
-    fs, _ = _fs(spark, path)
-    jvm = spark._jvm
+    fs, _ = filesystem(spark, path)
     rows = []
     for d in _list_partition_dirs(spark, path):
-        files = _data_files(fs, jvm, d)
+        files = _data_files(spark, fs, d)
         rows.append(
             (d.rsplit("/", 1)[-1], len(files), sum(n for _, n in files))
         )
@@ -102,17 +94,15 @@ def compact_layout(
     directory name, untouched. Returns a summary dict
     ``{partitions_compacted, files_before, files_after}``.
     """
-    fs, hroot = _fs(spark, path)
-    jvm = spark._jvm
-    hPath = jvm.org.apache.hadoop.fs.Path
+    fs, hroot = filesystem(spark, path)
     compacted = files_before = files_after = 0
 
     dirs = _list_partition_dirs(spark, path)
-    if not dirs and _data_files(fs, jvm, path):
+    if not dirs and _data_files(spark, fs, path):
         dirs = [hroot.toString()]
 
     for d in dirs:
-        files = _data_files(fs, jvm, d)
+        files = _data_files(spark, fs, d)
         total = sum(n for _, n in files)
         ideal = max(1, math.ceil(total / target_file_bytes))
         files_before += len(files)
@@ -125,11 +115,11 @@ def compact_layout(
         # partition column is not in the data files, matching originals)
         spark.read.parquet(d).coalesce(ideal).write.mode("overwrite").parquet(tmp)
 
-        new_files = _data_files(fs, jvm, tmp)
+        new_files = _data_files(spark, fs, tmp)
 
         # clear dotted residue a previously crashed run may have left
         # (renames below fail if the destination exists)
-        for st in fs.listStatus(hPath(d)):
+        for st in fs.listStatus(hadoop_path(spark, d)):
             nm = st.getPath().getName()
             if st.isFile() and nm.startswith(".") and nm.endswith(".compacting"):
                 fs.delete(st.getPath(), False)
@@ -140,9 +130,9 @@ def compact_layout(
         staged: list = []
         failed = None
         for p, _n in new_files:
-            dst = hPath(d + "/." + p.getName() + ".compacting")
+            dst = hadoop_path(spark, d + "/." + p.getName() + ".compacting")
             if fs.rename(p, dst):
-                staged.append((dst, hPath(d + "/" + p.getName())))
+                staged.append((dst, hadoop_path(spark, d + "/" + p.getName())))
             else:
                 failed = p
                 break
@@ -156,10 +146,10 @@ def compact_layout(
 
         # 2. move originals to a trash dir; roll back fully on failure
         trash = f"{path.rstrip('/')}/_compaction_trash/{d.rsplit('/', 1)[-1]}"
-        fs.mkdirs(hPath(trash))
+        fs.mkdirs(hadoop_path(spark, trash))
         trashed: list = []
         for p, _n in files:
-            tdst = hPath(trash + "/" + p.getName())
+            tdst = hadoop_path(spark, trash + "/" + p.getName())
             if fs.rename(p, tdst):
                 trashed.append((p, tdst))
             else:
@@ -183,8 +173,8 @@ def compact_layout(
                 )
 
         # 4. cleanup, only after every promote succeeded
-        fs.delete(hPath(f"{path.rstrip('/')}/_compaction_trash"), True)
-        fs.delete(hPath(f"{path.rstrip('/')}/_compaction_tmp"), True)
+        fs.delete(hadoop_path(spark, f"{path.rstrip('/')}/_compaction_trash"), True)
+        fs.delete(hadoop_path(spark, f"{path.rstrip('/')}/_compaction_tmp"), True)
         compacted += 1
         files_after += len(new_files)
 

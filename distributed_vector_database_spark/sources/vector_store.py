@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .index_layout import write_shards
+
 __all__ = ["VectorStore", "upsert_keep_latest"]
 
 
@@ -123,8 +125,8 @@ class VectorStore:
         return VectorStore(merged, id_col=self.id_col, vector_col=self.vector_col)
 
     def write(self, path: str, mode: str = "overwrite") -> None:
-        w = self.df.repartition("shard_id") if "shard_id" in self.df.columns else self.df
-        writer = w.write.mode(mode)
+        """Persist the store; a sharded store keeps the IVF layout."""
         if "shard_id" in self.df.columns:
-            writer = writer.partitionBy("shard_id")
-        writer.parquet(path)
+            write_shards(self.df, path, mode)
+        else:
+            self.df.write.mode(mode).parquet(path)

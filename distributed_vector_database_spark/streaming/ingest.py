@@ -3,15 +3,17 @@
 The reference ingests vectors one synchronous HTTP POST at a time
 (`reference: src/test.py:97-98` -> `src/compute_server.py:82-91`). The
 Spark-native continuous form is a Structured Streaming sink: each
-micro-batch is shard-assigned with the index's broadcast centroids and
-APPENDED to the partitioned parquet layout — the same write path as the
-batch `IVFIndex.write`, with exactly-once progress via the checkpoint.
+micro-batch goes through the batch write path itself,
+``IVFIndex.write(batch, mode="append")``: shard-assigned with the index's
+broadcast centroids, APPENDED to the partitioned parquet layout, and the
+persisted recall curve invalidated (an append changes the corpus the curve
+was measured on), with exactly-once progress via the checkpoint.
 
 Scale notes: assignment is a narrow map (centroids broadcast); the only
 wide step is the per-batch repartition by shard_id so each micro-batch adds
 O(num_shards) files instead of O(input_partitions x num_shards). Compact
-small files periodically (a batch `write` over the accumulated table) if
-micro-batches are tiny.
+small files periodically (``IVFIndex.compact()``) if micro-batches are
+tiny.
 """
 
 from __future__ import annotations
@@ -39,13 +41,7 @@ def stream_ingest(
         raise ValueError("stream_df must be a streaming DataFrame")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        assigned = index.assign(batch_df)
-        (
-            assigned.repartition("shard_id")
-            .write.mode("append")
-            .partitionBy("shard_id")
-            .parquet(index.path)
-        )
+        index.write(batch_df, mode="append")
 
     return (
         stream_df.writeStream.foreachBatch(write_batch)

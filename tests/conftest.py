@@ -99,3 +99,19 @@ def assert_df_matches_oracle(spark_df, duck_con, sql, check_order=False):
         exp_n = sorted(exp_n)
     for i, (g, e) in enumerate(zip(got_n, exp_n)):
         assert g == e, f"row {i} differs:\n  spark: {g}\n  duck : {e}"
+
+
+def spark_jobs_started(spark, fn):
+    """``(fn(), n)``: n is the number of Spark jobs ``fn`` started, counted
+    in a fresh job group after the listener bus has drained."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -47,13 +47,62 @@ def test_full_probe_full_rerank_is_exact(spark, embeddings, idx):
 
 
 def test_load_roundtrip_same_results(spark, embeddings, idx):
-    loaded = IVFPQIndex.load(spark, idx.path)
-    assert loaded.centroids == idx.centroids
-    assert loaded.codebooks == idx.codebooks
+    from tests.conftest import spark_jobs_started
+
     qv = _qv(embeddings, 3)
     a = [(r["vec_id"], r["adc_dist"]) for r in idx.search(qv, 10).collect()]
-    b = [(r["vec_id"], r["adc_dist"]) for r in loaded.search(qv, 10).collect()]
-    assert a == b and len(a) == 10
+    for root in (idx.path, "file:" + idx.path):
+        loaded, n_jobs = spark_jobs_started(
+            spark, lambda: IVFPQIndex.load(spark, root)
+        )
+        assert n_jobs == 0  # sidecars are read driver-side
+        assert loaded.centroids == idx.centroids
+        assert loaded.codebooks == idx.codebooks
+        b = [(r["vec_id"], r["adc_dist"]) for r in loaded.search(qv, 10).collect()]
+        assert a == b and len(a) == 10
+
+
+def test_load_reads_sidecars_written_by_spark_json(spark, idx, tmp_path):
+    """Indexes whose sidecars were written with ``coalesce(1).write.json``
+    (``_SUCCESS`` and ``.crc`` files beside the part file) still load,
+    with bit-identical centroids, codebooks and recall curve."""
+    from distributed_vector_database_spark.operators.ivf import IVFIndex
+
+    root = str(tmp_path / "spark_json_sidecars")
+    curve = [
+        {"nprobe": 1, "mean_recall": 0.1 + 0.2, "n_queries": 3, "k": 5},
+        {"nprobe": 8, "mean_recall": 1.0, "n_queries": 3, "k": 5},
+    ]
+    sidecars = {
+        "_centroids": (
+            [(i, c) for i, c in enumerate(idx.centroids)],
+            "shard_id int, centroid array<double>",
+        ),
+        "_pq_codebooks": (
+            [
+                (j, c, word)
+                for j, book in enumerate(idx.codebooks)
+                for c, word in enumerate(book)
+            ],
+            "subspace int, code int, codeword array<double>",
+        ),
+        "_recall_curve": (
+            [tuple(p.values()) for p in curve],
+            "nprobe int, mean_recall double, n_queries int, k int",
+        ),
+    }
+    for name, (rows, schema) in sidecars.items():
+        spark.createDataFrame(rows, schema).coalesce(1).write.json(
+            f"{root}/{name}"
+        )
+    assert (tmp_path / "spark_json_sidecars" / "_centroids" / "_SUCCESS").exists()
+
+    pq = IVFPQIndex.load(spark, root)
+    assert pq.centroids == idx.centroids
+    assert pq.codebooks == idx.codebooks
+    ivf = IVFIndex.load(spark, root)
+    assert ivf.centroids == idx.centroids
+    assert ivf.recall_curve == curve
 
 
 def test_search_batch_consistent_with_single(spark, embeddings, idx):

@@ -208,6 +208,22 @@ def test_index_save_load_roundtrip(spark, embeddings, tmp_path):
     b = [(r["vec_id"], r["score"]) for r in reopened.search(q, k=5, nprobe=4).collect()]
     assert a == b and len(a) == 5
 
+    # sidecars are written driver-side: saving them starts no Spark job
+    from distributed_vector_database_spark.operators.pq import (
+        codebooks_from_rows,
+        load_codebooks,
+        save_codebooks,
+    )
+    from tests.conftest import spark_jobs_started
+
+    books = codebooks_from_rows(cents, m=4)
+    _, cent_jobs = spark_jobs_started(spark, idx.save_centroids)
+    _, book_jobs = spark_jobs_started(
+        spark, lambda: save_codebooks(spark, books, path)
+    )
+    assert (cent_jobs, book_jobs) == (0, 0)
+    assert load_codebooks(spark, path) == books
+
 
 def test_tune_persists_curve_and_loaded_index_autotunes_without_jobs(
     spark, embeddings, tmp_path, monkeypatch
@@ -411,3 +427,30 @@ def test_file_uri_index_root_loads_and_invalidates_curve(
     idx.write(embeddings.filter(F.col("vec_id") % 2 == 0))
     assert idx.recall_curve is None
     assert IVFIndex.load(spark, path).recall_curve is None
+
+
+def test_index_layout_owns_the_on_disk_layout():
+    """The IVF layout (FileSystem handle, sidecar I/O, shard-partitioned
+    write) is decided in ``sources/index_layout.py`` only; the modules
+    that persist or compact an index go through it."""
+    from pathlib import Path
+
+    import distributed_vector_database_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    modules = [
+        "operators/ivf.py",
+        "operators/ivfpq.py",
+        "operators/pq.py",
+        "streaming/ingest.py",
+        "sources/compaction.py",
+        "sources/vector_store.py",
+    ]
+    banned = ("hadoop.fs.Path(", "getFileSystem(", '.partitionBy("shard_id")')
+    found = [
+        (m, b)
+        for m in modules
+        for b in banned
+        if b in (root / m).read_text()
+    ]
+    assert found == []

@@ -168,6 +168,46 @@ def test_compact_after_stream_ingest(spark, tmp_path):
     assert reopened.centroids == idx.centroids
 
 
+def test_stream_ingest_invalidates_persisted_recall_curve(spark, tmp_path):
+    """Streamed rows change the corpus a tuned curve was measured on, so
+    stream ingest drops the curve exactly as an appending ``write`` does:
+    a reloaded index has no curve and refuses autotuned search."""
+    from distributed_vector_database_spark.operators.ivf import IVFIndex
+    from distributed_vector_database_spark.streaming.ingest import stream_ingest
+
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    cents = [
+        [float(x) for x in r["embedding"]]
+        for r in emb.filter(F.col("vec_id") < 4).orderBy("vec_id").collect()
+    ]
+    path = str(tmp_path / "tuned_then_streamed")
+    idx = IVFIndex(spark, cents, path=path)
+    idx.write(emb.filter(F.col("vec_id") % 2 == 0))
+    queries = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("query_vector"),
+    )
+    idx.tune(queries, k=5, nprobes=(1, 4))
+    assert IVFIndex.load(spark, path).recall_curve is not None
+
+    src = str(tmp_path / "odd_rows")
+    emb.filter(F.col("vec_id") % 2 == 1).write.parquet(src)
+    stream = spark.readStream.schema(
+        "vec_id long, embedding array<float>, label int"
+    ).parquet(src)
+    q = stream_ingest(idx, stream, str(tmp_path / "ckpt_tuned"))
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    assert idx.df.count() == emb.count()
+    reopened = IVFIndex.load(spark, path)
+    assert reopened.recall_curve is None
+    with pytest.raises(ValueError, match="measured recall_curve"):
+        reopened.search(cents[0], k=5, target_recall=0.9)
+
+
 def test_stream_stream_join_equals_batch(spark, events_dir):
     """Inner stream-stream interval join (no watermark, exact replay) must
     equal the same join run as one batch job."""
